@@ -49,13 +49,18 @@ from pyspark.sql.types import (
 
 from flagembedding_spark.config import BM25Config
 
+# distinct terms whose term_hash one task memoizes; the cache is cleared when
+# full, so a heavy-tailed vocabulary cannot grow it without bound
+HASH_CACHE_MAX = 1 << 20
+
 STREAM_SCHEMA = StructType(
     [
         StructField("docid", LongType(), False),
         # docid_str is carried on DOC-STATS rows only (every consumer reads
-        # it from there); postings rows store NULL — at ~40 bytes × ~100
-        # postings/doc the repeated string was the single largest column
-        # crossing the Python→JVM boundary and landing in the stream parquet
+        # it from there); postings and partial rows store NULL — at ~40
+        # bytes × ~100 postings/doc the repeated string was the single
+        # largest column crossing the Python→JVM boundary and landing in
+        # the stream parquet
         StructField("docid_str", StringType(), True),
         StructField("term", StringType(), True),  # NULL → doc-stats row
         StructField("tf", LongType(), False),
@@ -80,7 +85,8 @@ def sha256_hex_col(arr: pa.Array) -> pa.Array:
     """content sha256 straight off the Arrow utf8 buffer — the bytes are
     already UTF-8, so hashing offset slices skips the str materialization
     AND the re-encode of the to_pylist() form (~1.9x on the sha column,
-    identical output — test_sha256_hex_col_identity)."""
+    identical output — test_sha256_hex_col_identity). A null slot hashes
+    to null, never to sha256("")."""
     import numpy as np
 
     if isinstance(arr, pa.ChunkedArray):
@@ -92,10 +98,12 @@ def sha256_hex_col(arr: pa.Array) -> pa.Array:
     ]
     mv = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
     sha = hashlib.sha256
-    return pa.array(
-        [sha(mv[off[j]:off[j + 1]]).hexdigest() for j in range(len(arr))],
-        pa.string(),
-    )
+    digests = [sha(mv[off[j]:off[j + 1]]).hexdigest() for j in range(len(arr))]
+    if arr.null_count:
+        digests = [
+            d if v else None for d, v in zip(digests, arr.is_valid().to_pylist())
+        ]
+    return pa.array(digests, pa.string())
 
 
 def partition_offsets(df: DataFrame) -> tuple[dict[int, int], dict[int, int]]:
@@ -153,14 +161,16 @@ def tokenize_count_stream(
     emit_partial_dictionary: bool = False,
 ) -> DataFrame:
     """corpus → unified stream of postings rows (term NOT NULL) and doc-stats
-    rows (term NULL, carrying content_sha256). Zero shuffles.
+    rows (term NULL, carrying docid_str and content_sha256). Zero shuffles.
+    A null in ``content_col`` raises a ValueError naming the column.
 
     ``with_term_hash`` (persisted-store builds only): append a
     ``term_hash`` column (int32, xxhash64 low bits) so query-time term
     lookups probe on a numeric key (operators/query.py). Computed per
     batch over the
     DICTIONARY-ENCODED term column — one scalar hash per DISTINCT term in
-    the batch (cached per task), then a take — instead of a per-row JVM
+    the batch (cached per task, at most HASH_CACHE_MAX entries), then a
+    take — instead of a per-row JVM
     projection over the full stream (which measured ~1 s of the corpus
     pass at 44M postings). Doc-stats rows carry the xxhash64 seed (42),
     matching F.xxhash64(NULL); bit-parity with the JVM projection is
@@ -168,8 +178,9 @@ def tokenize_count_stream(
 
     ``emit_partial_dictionary`` (persisted-store builds only): label every
     row with ``rowclass`` (0 postings / 1 doc-stats / 2 dictionary
-    partials) and emit one extra row per DISTINCT term per batch carrying
-    its batch-local df in ``tf`` — classic map-side partial aggregation
+    partials) and emit one extra row per DISTINCT term per batch (per
+    batch and group in grouped mode) carrying its batch-local df in
+    ``tf`` — classic map-side partial aggregation
     riding the same single pass. The store writer partitions the output by
     rowclass, so deriving the dictionary needs only the tiny partial files
     instead of re-scanning the full posting stream, and postings readers
@@ -179,11 +190,12 @@ def tokenize_count_stream(
 
     ``group_expr`` (evaluated over the slim (docid_str, content) frame, e.g.
     a hash-chunk of docid_str): docids become DENSE PER GROUP — each group's
-    ids run 0..n_group−1 in insertion order — so a caller composing
-    (group << B) | docid gets ids that are independent of which other groups
-    were built in the same pass (resumable-build stability). ``max_local``
-    bounds the per-group id and raises past it (overflow into the group
-    bits).
+    ids run 0..n_group−1 in insertion order — so they are independent of
+    which other groups were built in the same pass (resumable-build
+    stability). Every row carries its group in a ``_grp`` column (long),
+    so a writer partitions by it without re-deriving the group. With
+    ``max_local`` the emitted docid is ``group * max_local + local`` and a
+    local id past ``max_local`` raises (overflow into the group bits).
 
     ``docid_long``: name of a pre-existing integer docid column — ids pass
     through verbatim, so the offsets/counting machinery (and its pre-job)
@@ -228,6 +240,7 @@ def tokenize_count_stream(
 
     max_out_rows = 262_144  # bound per-batch memory (an input batch of 10k
     # docs would otherwise emit one ~1M-row output batch)
+    cache_cap = HASH_CACHE_MAX  # read at plan time: the tasks run elsewhere
 
     stop_arr = pa.array(sorted(stop), pa.string()) if stop else None
 
@@ -245,10 +258,10 @@ def tokenize_count_stream(
     if emit_partial_dictionary:
         extra_fields.append(StructField("rowclass", IntegerType(), False))
         extra_pa.append(pa.field("rowclass", pa.int32(), nullable=False))
-    out_schema = (
-        StructType(STREAM_SCHEMA.fields + extra_fields)
-        if extra_fields else STREAM_SCHEMA
-    )
+    if grouped:
+        extra_fields.append(StructField("_grp", LongType(), False))
+        extra_pa.append(pa.field("_grp", pa.int64(), nullable=False))
+    out_schema = StructType(STREAM_SCHEMA.fields + extra_fields)
     arrow_schema = _ARROW_SCHEMA
     for f in extra_pa:
         arrow_schema = arrow_schema.append(f)
@@ -266,15 +279,58 @@ def tokenize_count_stream(
         pass_ids = docid_long is not None
         seen: dict = {}  # offsets key → rows emitted so far in this task
 
+        def next_ids(okey, c: int) -> np.ndarray:
+            """The next ``c`` insertion-order ids of offsets key ``okey``
+            (a partition, or a (partition, group) pair)."""
+            base = offsets.get(okey)
+            if base is None:
+                # rows in a partition/group the counting pass never saw: the
+                # two jobs planned different splits — docids would collide
+                # with another range. Fail loudly.
+                raise RuntimeError(
+                    f"docid assignment: partition key {okey} has rows but "
+                    "no offset from the counting pass — input partition "
+                    "layout drifted between the offsets job and the map "
+                    "job (non-deterministic source / AQE replan / "
+                    "concurrent write?)"
+                )
+            local = seen.get(okey, 0)
+            seen[okey] = local + c
+            top = base + local + c - 1
+            if max_local is not None and top >= max_local:
+                raise RuntimeError(
+                    f"docid assignment: group-local id {top} overflows the "
+                    f"{max_local} id space for key {okey} — raise the "
+                    "group-id bit budget or use more groups"
+                )
+            return base + local + np.arange(c, dtype=np.int64)
+
+        def out_batch(cols, rowclass, hashes, groups) -> pa.RecordBatch:
+            """Append the optional columns (term_hash, rowclass, _grp)."""
+            if with_term_hash:
+                cols.append(pa.array(hashes.astype(np.int32, copy=False)))
+            if emit_partial_dictionary:
+                cols.append(pa.array(np.full(len(cols[0]), rowclass, dtype=np.int32)))
+            if grouped:
+                cols.append(pa.array(groups.astype(np.int64, copy=False)))
+            return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             ids = batch.column("docid_str")
             texts = batch.column("content")
+            if texts.null_count:
+                raise ValueError(
+                    f"content column {content_col!r} has {texts.null_count} "
+                    "null value(s): a null document cannot be tokenized — "
+                    "filter or fill it before indexing"
+                )
 
             # ---- docid assignment (insertion order, offsets-verified;
             # or verbatim passthrough when the source carries docids) ----
+            grps_np = None
             if pass_ids:
                 docids = batch.column("_docid").to_numpy(
                     zero_copy_only=False
@@ -282,53 +338,14 @@ def tokenize_count_stream(
             elif grouped:
                 docids = np.empty(n, dtype=np.int64)
                 grps_np = np.asarray(batch.column("_grp").to_numpy(
-                    zero_copy_only=False))
-                for g in np.unique(grps_np):
-                    okey = (pid, int(g))
-                    mask = grps_np == g
-                    c = int(mask.sum())
-                    base = offsets.get(okey)
-                    if base is None:
-                        # rows in a partition/group the counting pass never
-                        # saw: the two jobs planned different splits — docids
-                        # would collide with another range. Fail loudly.
-                        raise RuntimeError(
-                            f"docid assignment: partition key {okey} has "
-                            "rows but no offset from the counting pass — "
-                            "input partition layout drifted between the "
-                            "offsets job and the map job (non-deterministic "
-                            "source / AQE replan / concurrent write?)"
-                        )
-                    local = seen.get(okey, 0)
-                    docids[mask] = base + local + np.arange(c, dtype=np.int64)
-                    seen[okey] = local + c
-                    top = base + local + c - 1
-                    if max_local is not None and top >= max_local:
-                        raise RuntimeError(
-                            f"docid assignment: group-local id {top} "
-                            f"overflows the {max_local} id space for key "
-                            f"{okey} — raise the group-id bit budget or use "
-                            "more groups"
-                        )
+                    zero_copy_only=False)).astype(np.int64, copy=False)
+                ugrps, ginv = np.unique(grps_np, return_inverse=True)
+                for gi, g in enumerate(ugrps):
+                    mask = ginv == gi
+                    gbase = int(g) * max_local if max_local is not None else 0
+                    docids[mask] = gbase + next_ids((pid, int(g)), int(mask.sum()))
             else:
-                base = offsets.get(pid)
-                if base is None:
-                    raise RuntimeError(
-                        f"docid assignment: partition key {pid} has rows but "
-                        "no offset from the counting pass — input partition "
-                        "layout drifted between the offsets job and the map "
-                        "job (non-deterministic source / AQE replan / "
-                        "concurrent write?)"
-                    )
-                local = seen.get(pid, 0)
-                docids = base + local + np.arange(n, dtype=np.int64)
-                seen[pid] = local + n
-                if max_local is not None and docids[-1] >= max_local:
-                    raise RuntimeError(
-                        f"docid assignment: group-local id {int(docids[-1])} "
-                        f"overflows the {max_local} id space for key {pid} — "
-                        "raise the group-id bit budget or use more groups"
-                    )
+                docids = next_ids(pid, n)
 
             # ---- vectorized tokenize + per-doc term count (T1/A1) ----
             # split_pattern(" ") is identical to Python's str.split(" ")
@@ -361,38 +378,25 @@ def tokenize_count_stream(
             tf_col = pa.array(cnt.astype(np.int64))
 
             # ---- doc-stats batch (one row per doc, carries docid_str+sha) --
-            shas = sha256_hex_col(texts)
-            stats_cols = [
-                pa.array(docids),
-                ids.combine_chunks() if isinstance(ids, pa.ChunkedArray)
-                else ids,
-                pa.nulls(n, pa.string()),
-                pa.array(np.zeros(n, dtype=np.int64)),
-                pa.array(dl_np),
-                shas,
-            ]
-            if with_term_hash:
-                # F.xxhash64(NULL) returns the seed — stats rows match
-                stats_cols.append(pa.array(np.full(n, 42, dtype=np.int32)))
-            if emit_partial_dictionary:
-                stats_cols.append(pa.array(np.full(n, 1, dtype=np.int32)))
-            yield pa.RecordBatch.from_arrays(stats_cols, schema=arrow_schema)
+            # F.xxhash64(NULL) returns the seed — stats rows carry 42
+            yield out_batch(
+                [
+                    pa.array(docids),
+                    ids.combine_chunks() if isinstance(ids, pa.ChunkedArray)
+                    else ids,
+                    pa.nulls(n, pa.string()),
+                    pa.array(np.zeros(n, dtype=np.int64)),
+                    pa.array(dl_np),
+                    sha256_hex_col(texts),
+                ],
+                1, np.full(n, 42, dtype=np.int32), grps_np,
+            )
 
-            # ---- postings batch(es): sha is NULL; docid_str is NULL too
-            # EXCEPT in grouped mode, whose resumable-build consumer
-            # (plans/lineage.py) recomputes each row's chunk from docid_str
+            # ---- postings batch(es): docid_str and sha are NULL
             m = len(p_np)
             if m == 0:
                 continue
-            post_cols = [
-                pa.array(docids[p_np]),
-                pc.take(ids, pa.array(p_np)) if grouped
-                else pa.nulls(m, pa.string()),
-                term_col,
-                tf_col,
-                pa.array(dl_np[p_np]),
-                pa.nulls(m, pa.string()),
-            ]
+            hv = None
             if with_term_hash:
                 # one scalar hash per DISTINCT term in the batch, then take
                 dvals = enc.dictionary.to_pylist()
@@ -401,33 +405,50 @@ def tokenize_count_stream(
                     h = hash_cache.get(t)
                     if h is None:
                         h = xxhash64_py(t)
+                        if len(hash_cache) >= cache_cap:
+                            hash_cache.clear()
                         hash_cache[t] = h
                     hv[j] = h
-                post_cols.append(pa.array(hv[t_idx].astype(np.int32)))
-            if emit_partial_dictionary:
-                post_cols.append(pa.array(np.zeros(m, dtype=np.int32)))
-            post = pa.RecordBatch.from_arrays(post_cols, schema=arrow_schema)
+            post = out_batch(
+                [
+                    pa.array(docids[p_np]),
+                    pa.nulls(m, pa.string()),
+                    term_col,
+                    tf_col,
+                    pa.array(dl_np[p_np]),
+                    pa.nulls(m, pa.string()),
+                ],
+                0, hv[t_idx] if hv is not None else None,
+                grps_np[p_np] if grouped else None,
+            )
             for s in range(0, m, max_out_rows):
                 yield post.slice(s, max_out_rows)
 
             if emit_partial_dictionary:
-                # one row per DISTINCT term in the batch: tf = batch-local
-                # df (docs never span batches → sums to the exact global df)
-                kd = len(enc.dictionary)
-                part_cols = [
-                    pa.array(np.full(kd, -1, dtype=np.int64)),
-                    pa.nulls(kd, pa.string()),
-                    enc.dictionary,
-                    pa.array(np.bincount(t_idx, minlength=kd).astype(
-                        np.int64)),
-                    pa.array(np.zeros(kd, dtype=np.int64)),
-                    pa.nulls(kd, pa.string()),
-                ]
-                if with_term_hash:
-                    part_cols.append(pa.array(hv.astype(np.int32)))
-                part_cols.append(pa.array(np.full(kd, 2, dtype=np.int32)))
-                yield pa.RecordBatch.from_arrays(
-                    part_cols, schema=arrow_schema
+                # one row per DISTINCT term in the batch (per group in the
+                # batch when grouped): tf = batch-local df (docs never span
+                # batches → sums to the exact global df)
+                if grouped:
+                    pk, pdf = np.unique(
+                        (ginv[p_np] << 32) | t_idx, return_counts=True
+                    )
+                    pt, pg = pk & 0xFFFFFFFF, ugrps[pk >> 32]
+                    pterms = enc.dictionary.take(pa.array(pt))
+                else:
+                    pt, pg = slice(None), None
+                    pdf = np.bincount(t_idx, minlength=len(enc.dictionary))
+                    pterms = enc.dictionary
+                kd = len(pdf)
+                yield out_batch(
+                    [
+                        pa.array(np.full(kd, -1, dtype=np.int64)),
+                        pa.nulls(kd, pa.string()),
+                        pterms,
+                        pa.array(pdf.astype(np.int64)),
+                        pa.array(np.zeros(kd, dtype=np.int64)),
+                        pa.nulls(kd, pa.string()),
+                    ],
+                    2, hv[pt] if hv is not None else None, pg,
                 )
 
         my_expected = {

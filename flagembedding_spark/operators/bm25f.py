@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from flagembedding_spark.config import BM25Config
 from flagembedding_spark.functions.tokenize import whitespace_tokens
 from flagembedding_spark.operators.index_build import (
-    CorpusStats,
     InvertedIndex,
+    finalize_index,
+    posting_partials,
 )
 
 
@@ -84,18 +85,7 @@ def build_bm25f_index(
         "docid", F.col("docid").cast("string").alias("docid_str"), "dl",
         F.lit(None).cast("string").alias("content_sha256"),
     )
-    row = doc_stats.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    stats = CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
-    n = F.lit(float(stats.n_docs))
-    dictionary = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "idf", F.log((n - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
-    )
+    stats, dictionary = finalize_index(doc_stats, posting_partials(postings))
     return InvertedIndex(
         postings=postings, doc_stats=doc_stats, dictionary=dictionary,
         stats=stats, config=config,

@@ -36,6 +36,9 @@ from flagembedding_spark.config import BM25Config
 from flagembedding_spark.functions.tokenize import stop_filter, whitespace_tokens
 
 
+POSTING_COLS = ["term", "docid", "tf", "dl"]
+
+
 @dataclass
 class CorpusStats:
     n_docs: int
@@ -55,6 +58,40 @@ class InvertedIndex:
     @property
     def avgdl_effective(self) -> float:
         return self.stats.avgdl if self.config.use_avgdl else 1.0
+
+
+def bm25_idf(df: F.Column, n_docs: int) -> F.Column:
+    """The one BM25 idf: ln((N - df + 0.5)/(df + 0.5) + 1),
+    modeling_bm25.py:225."""
+    return F.log((F.lit(float(n_docs)) - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def finalize_index(
+    doc_stats: DataFrame | CorpusStats, partials: DataFrame
+) -> tuple[CorpusStats, DataFrame]:
+    """The one finalize step of every builder: corpus stats from the
+    doc-stats rows (one row per doc, carrying ``dl``) and the
+    (term, df, idf) dictionary from ``(term, df)`` partial rows — each
+    term's partials sum to its df. A partial is whatever the builder already
+    has: one row per posting (df 1), the kernel's batch-local dfs, or a whole
+    generation's dictionary. Exact (never approx_count_distinct — that would
+    break score parity) as long as no doc is counted in two partials.
+
+    ``doc_stats`` may be stats already combined elsewhere (``merge_stores``
+    weights each generation's avgdl by its n_docs)."""
+    if isinstance(doc_stats, CorpusStats):
+        stats = doc_stats
+    else:
+        row = doc_stats.agg(
+            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+        ).collect()[0]
+        stats = CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
+    dictionary = (
+        partials.groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .withColumn("idf", bm25_idf(F.col("df"), stats.n_docs))
+    )
+    return stats, dictionary
 
 
 def docid_expr() -> F.Column:
@@ -147,9 +184,10 @@ def build_index(
     ZERO shuffles for postings/doc_stats; only the term dictionary aggregates
     (map-side combine reduces that exchange to ~|vocab| rows per partition).
 
-    ``method='sql'``: pure-JVM explode → hash-agg path (no Python anywhere);
-    kept as a cross-check — both paths must produce an identical index — and
-    for engines where Python workers are unavailable.
+    ``method='sql'``: pure-JVM explode → hash-agg path (no Python anywhere),
+    the test reference — both paths must produce an identical index.
+
+    Both paths derive stats and dictionary with ``finalize_index``.
 
     ``docid_long``: name of a pre-existing integer docid column (e.g. a table
     that already carries a surrogate key). When given, the dense-id assignment
@@ -189,22 +227,8 @@ def build_index(
     if cache:
         postings = postings.cache()
 
-    row = doc_stats.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    stats = CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
-
-    # A2 document frequency + idf (exact — approx_count_distinct would break
-    # score parity). idf = ln((N - df + 0.5)/(df + 0.5) + 1), modeling_bm25.py:225
-    n = F.lit(float(stats.n_docs))
-    dictionary = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "idf",
-            F.log((n - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-    )
+    # A2 document frequency + idf: each posting is a df partial of 1
+    stats, dictionary = finalize_index(doc_stats, posting_partials(postings))
     if cache:
         dictionary = dictionary.cache()
 
@@ -214,6 +238,24 @@ def build_index(
         dictionary=dictionary,
         stats=stats,
         config=config,
+    )
+
+
+def posting_partials(postings: DataFrame) -> DataFrame:
+    """(term, df) partials of a postings frame: one df-1 row per posting."""
+    return postings.select("term", F.lit(1).alias("df"))
+
+
+def split_stream(stream: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """A rowclass stream (tokenize_count_stream with
+    ``emit_partial_dictionary``) → (posting rows, doc_stats, (term, df)
+    partials). Posting rows keep every stream column; the caller picks
+    the ones its postings carry."""
+    rc = F.col("rowclass")
+    return (
+        stream.filter(rc == 0),
+        stream.filter(rc == 1).select("docid", "docid_str", "dl", "content_sha256"),
+        stream.filter(rc == 2).select("term", F.col("tf").alias("df")),
     )
 
 
@@ -228,27 +270,15 @@ def _build_index_arrow(
     from flagembedding_spark.operators.arrow_postings import tokenize_count_stream
 
     stream = tokenize_count_stream(
-        corpus, config, content_col, docid_str, docid_long=docid_long
+        corpus, config, content_col, docid_str, docid_long=docid_long,
+        emit_partial_dictionary=True,
     )
     if cache:
         stream = stream.cache()
 
-    postings = stream.filter(F.col("term").isNotNull()).select(
-        "term", "docid", "tf", "dl"
-    )
-    doc_stats = stream.filter(F.col("term").isNull()).select(
-        "docid", "docid_str", "dl", "content_sha256"
-    )
-
-    row = doc_stats.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    stats = CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
-
-    n = F.lit(float(stats.n_docs))
-    dictionary = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn("idf", F.log((n - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0))
-    )
+    posting_rows, doc_stats, partials = split_stream(stream)
+    postings = posting_rows.select(*POSTING_COLS)
+    stats, dictionary = finalize_index(doc_stats, partials)
     if cache:
         dictionary = dictionary.cache()
 
@@ -266,9 +296,8 @@ def index_from_postings(
 ) -> InvertedIndex:
     """Construct the logical index from PREBUILT postings
     (term, docid, tf, dl[, positions]) — e.g. positional postings headed
-    for a -storePositions segment build. Stats and dictionary are derived
-    with one aggregate each; doc_stats carries only (docid, dl) (no source
-    row to hash)."""
+    for a -storePositions segment build. doc_stats carries only (docid, dl)
+    (no source row to hash)."""
     config = config or BM25Config()
     if cache:
         postings = postings.cache()
@@ -280,18 +309,7 @@ def index_from_postings(
             F.lit(None).cast("string").alias("content_sha256"),
         )
     )
-    row = doc_stats.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    stats = CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
-    n = F.lit(float(stats.n_docs))
-    dictionary = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "idf", F.log((n - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
-    )
+    stats, dictionary = finalize_index(doc_stats, posting_partials(postings))
     return InvertedIndex(
         postings=postings, doc_stats=doc_stats, dictionary=dictionary,
         stats=stats, config=config,

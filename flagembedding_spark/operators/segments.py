@@ -43,7 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flagembedding_spark.config import BM25Config
-from flagembedding_spark.operators.index_build import CorpusStats, InvertedIndex
+from flagembedding_spark.operators.index_build import (
+    CorpusStats,
+    InvertedIndex,
+    finalize_index,
+)
 
 # ---------------------------------------------------------------------------
 # vectorized LEB128 varint codec (numpy; no per-value Python loops)
@@ -763,21 +767,11 @@ def merge_stores(
     blocks = segs[0].blocks
     for s in segs[1:]:
         blocks = blocks.unionByName(s.blocks)
-    dictionary = segs[0].dictionary.select("term", "df")
+    # each generation's dictionary is a (term, df) partial of the merged one
+    partials = segs[0].dictionary.select("term", "df")
     for s in segs[1:]:
-        dictionary = dictionary.unionByName(s.dictionary.select("term", "df"))
-    dictionary = (
-        dictionary.groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-    )
-    stats = CorpusStats(n_docs=n, avgdl=avgdl)
+        partials = partials.unionByName(s.dictionary.select("term", "df"))
+    stats, dictionary = finalize_index(CorpusStats(n_docs=n, avgdl=avgdl), partials)
     if decode_path:
         # positions survive the decode path when EVERY generation stored
         # them (poss streams are decoded and re-encoded into the rebuilt

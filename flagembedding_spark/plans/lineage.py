@@ -11,10 +11,12 @@ row/byte/wall-time metrics; a re-run skips every chunk already marked done,
 rebuilds only the missing ones, then finalizes dictionary + stats over all
 chunk outputs.
 
-Layout:
-    <root>/stream/chunk=<i>/...parquet   per-chunk postings+docstats stream
-    <root>/lineage/...parquet            (build stage metrics, appended)
-    <root>/dictionary/, stats.json       finalize artifacts
+Layout (the one persisted stream layout — sources/index_store.py):
+    <root>/stream/_chunk=<i>/rowclass=<r>/   per-chunk postings / doc-stats /
+                                             dictionary-partial rows
+    <root>/lineage/...parquet                (build stage metrics, appended)
+    <root>/dictionary/, stats.json           finalize artifacts
+A finalized root opens with ``load_index``.
 
 DocIDs must be stable under resume, so they are chunk-scoped:
     docid = (chunk_id << 40) | row_within_chunk
@@ -28,8 +30,7 @@ read instead of a directory listing.
 
 from __future__ import annotations
 
-import json
-import os
+import dataclasses
 import time
 from dataclasses import dataclass
 
@@ -37,10 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flagembedding_spark.config import BM25Config
-from flagembedding_spark.operators.index_build import (
-    CorpusStats,
-    InvertedIndex,
-    docid_expr,
+from flagembedding_spark.operators.index_build import InvertedIndex, docid_expr
+from flagembedding_spark.sources.index_store import (
+    dir_bytes,
+    finalize_store,
+    load_index,
+    path_exists,
+    read_stream,
 )
 
 LINEAGE_SCHEMA = (
@@ -60,24 +64,13 @@ class ChunkResult:
     skipped: bool
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for dirpath, _, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(dirpath, f))
-            except OSError:
-                pass
-    return total
-
-
 def _lineage_path(root: str) -> str:
     return f"{root}/lineage"
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     p = _lineage_path(root)
-    if not os.path.exists(p):
+    if not path_exists(spark, p):
         return None
     return spark.read.parquet(p)
 
@@ -119,10 +112,10 @@ def build_resumable(
     parallelism) rebuilds exactly the missing chunks with the same content.
 
     ``wave_size`` chunks are built per corpus pass (a wave writes
-    partitionBy(_chunk) with dynamic partition overwrite, so a crashed wave
-    re-runs cleanly). Resume granularity = wave; scan count = ceil(missing /
-    wave_size) — at 10^12 files use large waves so the source is read O(1)
-    times, with n_chunks large only to bound per-task state.
+    partitionBy(_chunk, rowclass) with dynamic partition overwrite, so a
+    crashed wave re-runs cleanly). Resume granularity = wave; scan count =
+    ceil(missing / wave_size) — at 10^12 files use large waves so the source
+    is read O(1) times, with n_chunks large only to bound per-task state.
     """
     from flagembedding_spark.operators.arrow_postings import tokenize_count_stream
 
@@ -137,7 +130,6 @@ def build_resumable(
     missing = [c for c in range(n_chunks) if c not in done]
     built = 0
 
-    chunk_of_key = F.pmod(F.xxhash64(F.col("docid_str")), F.lit(n_chunks)).cast("int")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     for w in range(0, len(missing), max(wave_size, 1)):
@@ -151,29 +143,30 @@ def build_resumable(
         # grouped assignment: each chunk's local ids are DENSE from 0 in
         # source order, independent of wave composition — a resumed build
         # assigns the same docid VALUES as a single-shot build (given the
-        # same source layout), and local ids are asserted < 2^CHUNK_ID_BITS
-        # so chunk bits never collide.
+        # same source layout). The kernel composes chunk << CHUNK_ID_BITS |
+        # local, asserts local < 2^CHUNK_ID_BITS so chunk bits never
+        # collide, and labels every row with its chunk.
         stream = tokenize_count_stream(
             part, config, content_col, did,
-            group_expr=chunk_of_key, max_local=1 << CHUNK_ID_BITS,
+            group_expr=F.pmod(F.xxhash64("docid_str"), F.lit(n_chunks)).cast("int"),
+            max_local=1 << CHUNK_ID_BITS,
+            with_term_hash=True, emit_partial_dictionary=True,
+        ).withColumnRenamed("_grp", "_chunk")
+        stream.write.mode("overwrite").partitionBy("_chunk", "rowclass").parquet(
+            f"{root}/stream"
         )
-        stream = stream.withColumn("_chunk", chunk_of_key).withColumn(
-            "docid",
-            (F.col("_chunk").cast("long") * (1 << CHUNK_ID_BITS)) + F.col("docid"),
-        )
-        stream.write.mode("overwrite").partitionBy("_chunk").parquet(f"{root}/stream")
         wall = int((time.perf_counter() - t0) * 1000)
 
         rows_by_chunk = {
             r["_chunk"]: r["cnt"]
-            for r in spark.read.parquet(f"{root}/stream")
+            for r in read_stream(spark, root)
             .filter(F.col("_chunk").isin(wave))
             .groupBy("_chunk").agg(F.count("*").alias("cnt")).collect()
         }
         lineage_rows = []
         for c in wave:
             n_rows = int(rows_by_chunk.get(c, 0))
-            nbytes = _dir_bytes(f"{root}/stream/_chunk={c}")
+            nbytes = dir_bytes(spark, f"{root}/stream/_chunk={c}")
             lineage_rows.append(
                 (build_id, "postings", c, "done", n_rows, nbytes,
                  wall // max(len(wave), 1), 1)
@@ -192,44 +185,10 @@ def finalize_resumable(
     """Stage 2: dictionary + corpus stats over every chunk stream; idempotent."""
     config = config or BM25Config()
     t0 = time.perf_counter()
-    stream = spark.read.parquet(f"{root}/stream")
-    doc_stats = stream.filter(F.col("term").isNull()).select(
-        "docid", "docid_str", "dl", "content_sha256"
-    )
-    postings = stream.filter(F.col("term").isNotNull()).select(
-        "term", "docid", "tf", "dl"
-    )
-    row = doc_stats.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    stats = CorpusStats(int(row["n"]), float(row["avgdl"] or 0.0))
-    n = F.lit(float(stats.n_docs))
-    dictionary = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn("idf", F.log((n - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0))
-    )
-    dictionary.write.mode("overwrite").parquet(f"{root}/dictionary")
-    with open(f"{root}/stats.json", "w") as f:
-        json.dump(
-            {
-                "n_docs": stats.n_docs,
-                "avgdl": stats.avgdl,
-                "k1": config.k1,
-                "b": config.b,
-                "use_avgdl": config.use_avgdl,
-                "stop_tokens": sorted(config.stop_tokens),
-                "layout": "stream",
-            },
-            f,
-        )
+    stats = finalize_store(spark, root, config)
     _append_lineage(
         spark, root,
         [(build_id, "finalize", -1, "done", stats.n_docs, 0,
           int((time.perf_counter() - t0) * 1000), 1)],
     )
-    return InvertedIndex(
-        postings=postings,
-        doc_stats=doc_stats,
-        dictionary=spark.read.parquet(f"{root}/dictionary"),
-        stats=stats,
-        config=config,
-    )
+    return dataclasses.replace(load_index(spark, root), config=config)

@@ -1,18 +1,26 @@
 """Persisted index layout — the analog of the reference's on-disk Lucene index
 (modeling_bm25.py:91-107 builds one via Anserini ``IndexCollection``; S10).
 
-Layout (parquet; Iceberg-compatible — swap ``.parquet(...)`` for
-``.format("iceberg").save(...)`` on a real deployment):
+One layout, written by every persisted builder (parquet; Iceberg-compatible
+— swap ``.parquet(...)`` for ``.format("iceberg").save(...)`` on a real
+deployment):
 
-    <root>/postings/    (term, docid, tf, dl)   — the postings table
-    <root>/doc_stats/   (docid, docid_str, dl, content_sha256)
-    <root>/dictionary/  (term, df, idf)
-    <root>/stats.json   {n_docs, avgdl, k1, b, use_avgdl}
+    <root>/stream/[<part>=<v>/]rowclass=<r>/   the tokenize_count_stream rows
+        r=0 postings   (docid, term, tf, dl, term_hash; docid_str NULL)
+        r=1 doc-stats  (docid, docid_str, dl, content_sha256)
+        r=2 (term, batch-local df in ``tf``) dictionary partials
+    <root>/dictionary/  (term, df, idf)  — finalize_index over r=1 and r=2
+    <root>/stats.json   {n_docs, avgdl, k1, b, use_avgdl, stop_tokens, layout}
 
-The one-pass builder below writes the unified stream partitioned by row
-class instead (<root>/stream/rowclass={0 postings, 1 doc-stats,
-2 map-side dictionary partials}), so the single corpus pass also yields
-the tiny files the dictionary derives from.
+``<part>`` is the writer's own partition above rowclass: none for the
+one-pass ``build_and_save_index``, ``_chunk`` for the resumable build
+(plans/lineage.py) and ``_batch`` for streaming ingest (streaming/ingest.py).
+Readers scan ``<root>/stream`` once with the declared schema and prune by
+rowclass, so all three open through ``load_index``.
+
+Metadata and existence checks go through the Hadoop FileSystem API, the same
+filesystem Spark reads the parquet from, so a ``file://``, ``hdfs://`` or
+object-store root behaves like a plain local path.
 
 The segment-compressed, term-partitioned layout (delta-gap varint blocks +
 block-max metadata) lives in operators/segments.py; this store is the plain
@@ -22,12 +30,92 @@ columnar form every other operator composes with.
 from __future__ import annotations
 
 import json
-import os
+import time
 
 from pyspark.sql import SparkSession
 
 from flagembedding_spark.config import BM25Config
-from flagembedding_spark.operators.index_build import CorpusStats, InvertedIndex
+from flagembedding_spark.operators.index_build import (
+    POSTING_COLS,
+    CorpusStats,
+    InvertedIndex,
+    finalize_index,
+    split_stream,
+)
+
+LAYOUT = "stream-rowclass"
+
+# every column tokenize_count_stream writes with term_hash + rowclass; a
+# writer's own partition column (_chunk / _batch) is discovered from the path
+STREAM_DDL = (
+    "docid long, docid_str string, term string, tf long, dl long, "
+    "content_sha256 string, term_hash int, rowclass int"
+)
+
+
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` under the session's config."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def dir_bytes(spark: SparkSession, path: str) -> int:
+    """Total bytes of the files under ``path`` (0 if it is absent)."""
+    fs, p = _fs(spark, path)
+    return int(fs.getContentSummary(p).getLength()) if fs.exists(p) else 0
+
+
+def _write_json(spark: SparkSession, path: str, obj: dict) -> None:
+    fs, p = _fs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(obj).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_json(spark: SparkSession, path: str) -> dict:
+    fs, p = _fs(spark, path)
+    stream = fs.open(p)
+    try:
+        return json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+
+
+def read_stream(spark: SparkSession, root: str):
+    """The store's whole row stream, with the declared schema (an empty
+    corpus writes no part files, so there is nothing to infer from)."""
+    return spark.read.schema(STREAM_DDL).parquet(f"{root}/stream")
+
+
+def finalize_store(
+    spark: SparkSession, root: str, config: BM25Config
+) -> CorpusStats:
+    """Derive the dictionary and corpus stats of the stream under ``root``
+    (finalize_index over its doc-stats rows and dictionary partials) and
+    write ``dictionary/`` and ``stats.json``. Scans only the rowclass 1 and
+    2 files. Idempotent."""
+    _, doc_stats, partials = split_stream(read_stream(spark, root))
+    stats, dictionary = finalize_index(doc_stats, partials)
+    dictionary.write.mode("overwrite").parquet(f"{root}/dictionary")
+    _write_json(spark, f"{root}/stats.json", {
+        "n_docs": stats.n_docs,
+        "avgdl": stats.avgdl,
+        "k1": config.k1,
+        "b": config.b,
+        "use_avgdl": config.use_avgdl,
+        "stop_tokens": sorted(config.stop_tokens),
+        "layout": LAYOUT,
+    })
+    return stats
 
 
 def build_and_save_index(
@@ -40,18 +128,14 @@ def build_and_save_index(
 ) -> InvertedIndex:
     """One-pass persisted build (the real index-build job shape at scale):
 
-      corpus → mapInArrow tokenize-and-count → write unified stream parquet
-      (single corpus pass, postings + doc-stats rows interleaved) → derive
-      dictionary/stats from the persisted parquet (cheap column-pruned scans,
-      no recompute of the corpus pass).
+      corpus → mapInArrow tokenize-and-count → write the stream parquet
+      partitioned by rowclass (single corpus pass) → finalize_store derives
+      dictionary/stats from the tiny doc-stats and partial files (no
+      recompute of the corpus pass).
 
     Returns the loaded index backed by the persisted files.
     """
-    from pyspark.sql import functions as F
-
     from flagembedding_spark.operators.arrow_postings import tokenize_count_stream
-
-    import time
 
     config = config or BM25Config()
     t0 = time.perf_counter()
@@ -60,8 +144,7 @@ def build_and_save_index(
     # 5.5 s query batch over 44M postings vs 0.7 s for the scan itself —
     # guide §3.1: make the join key cheap). Hashed inside the kernel per
     # DISTINCT term per batch (a per-row JVM xxhash64 projection cost ~1 s
-    # of the corpus pass); NULL term (doc-stats rows) carries the seed and
-    # is filtered out of postings on read as before.
+    # of the corpus pass).
     stream = tokenize_count_stream(
         corpus, config, content_col, docid_str,
         with_term_hash=True, emit_partial_dictionary=True,
@@ -71,8 +154,7 @@ def build_and_save_index(
     # SAME single pass (measured +0.25 s on the 44M-posting pass for the
     # 3-value dynamic-partition sort): finalize then reads only the tiny
     # partial files instead of re-aggregating the full stream (~1-2 s per
-    # build), and postings readers skip the stats rows and their NULL
-    # filter entirely.
+    # build), and postings readers skip the stats rows entirely.
     stream.write.mode("overwrite").partitionBy("rowclass").parquet(
         f"{root}/stream"
     )
@@ -84,122 +166,31 @@ def build_and_save_index(
 
     t0 = time.perf_counter()
     spark = corpus.sparkSession
-    # dictionary from the kernel's map-side partial dfs (a doc never spans
-    # two batches, so SUM(batch-local df) is the exact global df);
-    # n_docs/avgdl from the doc-stats files. A row class absent from the
-    # store (empty corpus / everything stop-filtered) reads as empty.
-    stats_rows = _read_rowclass(
-        spark, root, 1, "docid long, docid_str string, dl long"
-    )
-    row = stats_rows.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avg_dl")
-    ).collect()[0]
-    n_docs = int(row["n"])
-    avgdl = float(row["avg_dl"] or 0.0)
-    n = float(n_docs)
-    partials = _read_rowclass(spark, root, 2, "term string, tf long")
-    dictionary = (
-        partials.groupBy("term")
-        .agg(F.sum("tf").alias("df"))
-        .select(
-            "term",
-            "df",
-            F.log(
-                (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            ).alias("idf"),
-        )
-    )
-    dictionary.write.mode("overwrite").parquet(f"{root}/dictionary")
-
-    meta = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "k1": config.k1,
-        "b": config.b,
-        "use_avgdl": config.use_avgdl,
-        "stop_tokens": sorted(config.stop_tokens),
-        "layout": "stream-rowclass",
-    }
-    with open(f"{root}/stats.json", "w") as f:
-        json.dump(meta, f)
+    finalize_store(spark, root, config)
     if timings is not None:
         timings["finalize_sec"] = time.perf_counter() - t0
     return load_index(spark, root)
 
 
-def _read_rowclass(spark: SparkSession, root: str, rc: int, schema: str):
-    """Read one rowclass partition of a stream store; an absent class
-    (empty corpus, or everything stop-filtered) reads as an empty frame of
-    the given minimal schema rather than an AnalysisException."""
-    path = f"{root}/stream/rowclass={rc}"
-    if os.path.isdir(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
-
-
-def save_index(index: InvertedIndex, root: str, postings_partitions: int | None = None) -> None:
-    p = index.postings
-    if postings_partitions:
-        p = p.repartition(postings_partitions)
-    p.write.mode("overwrite").parquet(f"{root}/postings")
-    index.doc_stats.write.mode("overwrite").parquet(f"{root}/doc_stats")
-    index.dictionary.write.mode("overwrite").parquet(f"{root}/dictionary")
-    cfg = index.config
-    meta = {
-        "n_docs": index.stats.n_docs,
-        "avgdl": index.stats.avgdl,
-        "k1": cfg.k1,
-        "b": cfg.b,
-        "use_avgdl": cfg.use_avgdl,
-        "stop_tokens": sorted(cfg.stop_tokens),
-    }
-    os.makedirs(root, exist_ok=True)
-    with open(f"{root}/stats.json", "w") as f:
-        json.dump(meta, f)
-
-
 def load_index(spark: SparkSession, root: str) -> InvertedIndex:
-    from pyspark.sql import functions as F
-
-    with open(f"{root}/stats.json") as f:
-        meta = json.load(f)
+    meta = _read_json(spark, f"{root}/stats.json")
+    if meta.get("layout") != LAYOUT:
+        raise ValueError(
+            f"{root}: store layout {meta.get('layout')!r} is not "
+            f"{LAYOUT!r} — rebuild it with build_and_save_index, "
+            "build_resumable + finalize_resumable or streaming ingest"
+        )
     cfg = BM25Config(
         k1=meta["k1"],
         b=meta["b"],
         use_avgdl=meta["use_avgdl"],
         stop_tokens=frozenset(meta.get("stop_tokens", [])),
     )
-    if meta.get("layout") == "stream-rowclass":
-        # row classes are file-partitioned: postings readers scan pure
-        # posting files — no interleaved stats rows, no NULL filter
-        post = _read_rowclass(
-            spark, root, 0,
-            "docid long, docid_str string, term string, tf long, dl long, "
-            "content_sha256 string, term_hash int",
-        )
-        post_cols = ["term", "docid", "tf", "dl"] + (
-            ["term_hash"] if "term_hash" in post.columns else []
-        )
-        postings = post.select(*post_cols)
-        doc_stats = _read_rowclass(
-            spark, root, 1,
-            "docid long, docid_str string, term string, tf long, dl long, "
-            "content_sha256 string, term_hash int",
-        ).select("docid", "docid_str", "dl", "content_sha256")
-    elif meta.get("layout") == "stream":
-        stream = spark.read.parquet(f"{root}/stream")
-        post_cols = ["term", "docid", "tf", "dl"] + (
-            ["term_hash"] if "term_hash" in stream.columns else []
-        )
-        postings = stream.filter(F.col("term").isNotNull()).select(*post_cols)
-        doc_stats = stream.filter(F.col("term").isNull()).select(
-            "docid", "docid_str", "dl", "content_sha256"
-        )
-    else:
-        postings = spark.read.parquet(f"{root}/postings")
-        doc_stats = spark.read.parquet(f"{root}/doc_stats")
+    # row classes are file-partitioned: postings readers scan pure
+    # posting files — no interleaved stats rows, no NULL filter
+    posting_rows, doc_stats, _ = split_stream(read_stream(spark, root))
     return InvertedIndex(
-        postings=postings,
+        postings=posting_rows.select(*POSTING_COLS, "term_hash"),
         doc_stats=doc_stats,
         dictionary=spark.read.parquet(f"{root}/dictionary"),
         stats=CorpusStats(n_docs=meta["n_docs"], avgdl=meta["avgdl"]),

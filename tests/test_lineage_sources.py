@@ -211,3 +211,71 @@ def test_resumed_docid_values_match_single_shot(spark, tiny_corpus, tmproot):
         by_chunk[d >> 40].append(d & ((1 << 40) - 1))
     for chunk, locals_ in by_chunk.items():
         assert sorted(locals_) == list(range(len(locals_))), chunk
+
+
+def test_one_index_contract_across_builders(spark, tmproot):
+    """Every builder derives stats and dictionary through one finalize step:
+    the one-pass store (at a plain path and at a file:// URI), a crashed
+    then resumed resumable build at a file:// URI (two chunks per wave, so
+    a kernel batch spans several chunks), a one-batch streaming ingest and
+    the in-memory build give the same (term, df, idf), n_docs, avgdl and
+    postings, and load_index opens every persisted root."""
+    import json
+
+    from flagembedding_spark.schemas import CORPUS_SCHEMA, synth_corpus_rows
+    from flagembedding_spark.sources.index_store import (
+        build_and_save_index,
+        load_index,
+    )
+    from flagembedding_spark.streaming.ingest import (
+        load_incremental_index,
+        start_incremental_ingest,
+    )
+
+    cfg = BM25Config()
+    rows = synth_corpus_rows(90, seed=5)
+    corpus = spark.createDataFrame(rows, CORPUS_SCHEMA)
+    uri = "file://" + tmproot
+
+    built = {
+        "store": build_and_save_index(corpus, f"{tmproot}/store", cfg),
+        "store_uri": build_and_save_index(corpus, f"{uri}/store_uri", cfg),
+    }
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_resumable(corpus, f"{uri}/lin", cfg, n_chunks=4, wave_size=2,
+                        fail_after_chunks=2)
+    assert completed_chunks(spark, f"{uri}/lin", "postings") == {0, 1}
+    resumed = build_resumable(corpus, f"{uri}/lin", cfg, n_chunks=4,
+                              wave_size=2)
+    assert [r.skipped for r in resumed] == [True, True, False, False]
+    assert all(r.bytes_out > 0 for r in resumed if not r.skipped)
+    built["lineage"] = finalize_resumable(spark, f"{uri}/lin", cfg)
+
+    os.makedirs(f"{tmproot}/in")
+    with open(f"{tmproot}/in/wave.json", "w") as f:
+        for repo, path, commit, lang, content in rows:
+            f.write(json.dumps({"repo": repo, "path": path, "commit": commit,
+                                "lang": lang, "content": content}) + "\n")
+    start_incremental_ingest(
+        spark, f"{tmproot}/in", f"{tmproot}/ingest", cfg
+    ).awaitTermination(120)
+    built["ingest"] = load_incremental_index(spark, f"{tmproot}/ingest", cfg)
+    built["memory"] = build_index(corpus, cfg, cache=False)
+    for name in ("store_uri", "lineage", "ingest"):
+        root = {"store_uri": f"{uri}/store_uri", "lineage": f"{uri}/lin",
+                "ingest": f"{tmproot}/ingest"}[name]
+        built[f"{name}_loaded"] = load_index(spark, root)
+
+    def contract(idx):
+        return (
+            sorted((r["term"], r["df"], round(r["idf"], 10))
+                   for r in idx.dictionary.collect()),
+            idx.stats.n_docs,
+            round(idx.stats.avgdl, 10),
+            _canon_index(idx),
+        )
+
+    want = contract(built.pop("memory"))
+    assert want[1] == 90
+    for name, idx in built.items():
+        assert contract(idx) == want, name

@@ -266,3 +266,49 @@ def test_sha256_hex_col_identity():
     assert sha256_hex_col(chunked).to_pylist() == want
     large = pa.array(texts, pa.large_string())
     assert sha256_hex_col(large).to_pylist() == want
+
+
+def test_null_content_fails_clearly(spark):
+    """A null content slot hashes to null (never sha256("")), and the
+    tokenize kernel rejects a null document with a ValueError naming the
+    content column instead of a bare Arrow copy error."""
+    import pyarrow as pa
+    import pytest
+
+    from flagembedding_spark.config import BM25Config
+    from flagembedding_spark.operators.arrow_postings import sha256_hex_col
+    from flagembedding_spark.operators.index_build import build_index
+
+    got = sha256_hex_col(pa.array(["a", None, ""], pa.string())).to_pylist()
+    assert got[1] is None
+    assert got[0] is not None and got[2] is not None
+    assert sha256_hex_col(pa.array([None, "b"]).slice(1)).null_count == 0
+
+    docs = spark.createDataFrame(
+        [(1, "def x"), (2, None), (3, "return y")], "doc_id long, body string"
+    )
+    with pytest.raises(Exception, match="ValueError: content column 'body'"):
+        build_index(docs, BM25Config(), content_col="body",
+                    docid_long="doc_id", cache=False).postings.count()
+
+
+def test_term_hash_cache_cap_bit_identical(spark, monkeypatch):
+    """The per-task term_hash cache is cleared when it reaches
+    HASH_CACHE_MAX: a tiny cap must give a bit-identical stream."""
+    from collections import Counter
+
+    import flagembedding_spark.operators.arrow_postings as AP
+    from flagembedding_spark.config import BM25Config
+    from flagembedding_spark.schemas import distributed_synth_corpus
+
+    corpus = distributed_synth_corpus(spark, 300, partitions=3)
+
+    def stream_rows():
+        return Counter(map(tuple, AP.tokenize_count_stream(
+            corpus, BM25Config(), with_term_hash=True,
+            emit_partial_dictionary=True,
+        ).collect()))
+
+    want = stream_rows()
+    monkeypatch.setattr(AP, "HASH_CACHE_MAX", 2)
+    assert stream_rows() == want
